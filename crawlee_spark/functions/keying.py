@@ -115,11 +115,16 @@ def request_id_py(unique_key: str) -> str:
 # normalized form, i.e. ``normalize_url_py(u, kf) == u`` for any kf —
 # lowercase scheme, lowercase host[:port] netloc (conservative charset: no
 # userinfo/brackets — those fall through to the full parser), no query, no
-# fragment, path absent or not ending in ``/``. The steady-state crawl
+# fragment, path absent or not ending in ``/``, no tab/CR/LF anywhere in the
+# path and no whitespace or control character at its end (urlsplit drops
+# the former, the normalizer strips the latter; ``\Z`` because ``$`` also
+# matches before a trailing newline). The steady-state crawl
 # frontier is dominated by such URLs (they are the kernel's own output
 # shape), so the per-row urlsplit + rebuild is skipped for them; property
 # test pins fast-path ≡ full-parser agreement.
-_NORMALIZED_URL_RE = re.compile(r"^[a-z][a-z0-9+.-]*://[a-z0-9.:-]+(?:/[^?#]*[^/?#])?$")
+_NORMALIZED_URL_RE = re.compile(
+    r"^[a-z][a-z0-9+.-]*://[a-z0-9.:-]+(?:/[^?#\t\r\n]*[^/?#\s])?\Z"
+)
 
 
 # ---------------------------------------------------------------------------
@@ -148,11 +153,6 @@ def _normalize_batch(urls: pd.Series, keep_fragment: bool) -> pd.Series:
 @pandas_udf(StringType())
 def normalize_url_udf(urls: pd.Series) -> pd.Series:
     return _normalize_batch(urls, False)
-
-
-@pandas_udf(StringType())
-def normalize_url_keep_fragment_udf(urls: pd.Series) -> pd.Series:
-    return _normalize_batch(urls, True)
 
 
 _KEYING_SCHEMA = StructType(

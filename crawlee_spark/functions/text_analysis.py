@@ -21,12 +21,30 @@ Operators:
 - ``doc_fingerprint_col`` — polynomial rolling hash over the token stream
   (order-sensitive: reordered documents get different fingerprints,
   whitespace-only edits do not).
+- ``spread`` — the round-robin repartition every heavy per-row pass uses.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def spread(df: DataFrame) -> DataFrame:
+    """Round-robin repartition to the session's default parallelism before
+    heavy per-row work (UDFs, hash/regex chains, interpreted HOF folds).
+
+    Small inputs arrive as single-row-group parquet files, so without this
+    the whole per-row pass runs in ONE task no matter how many splits the
+    scan planner makes (a parquet reader only materializes row groups whose
+    midpoint falls in its split). The shuffled bytes are tiny next to the
+    per-row compute. The Exchange is also a plan barrier: columns projected
+    above it stay materialized, where CollapseProject would otherwise
+    re-inline an aliased token array into every expression that uses it.
+    Cheap per-row passes measure slower with it — spread only before
+    several µs of work per row."""
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+
 
 # ---------------------------------------------------------------------------
 # tokenization
@@ -66,10 +84,6 @@ def bpe_ish_token_count_col(text: Column | str) -> Column:
 # A compact stopword list (English function words; the quality signal is
 # "does this look like prose", not language ID).
 STOPWORDS = ("the", "a", "an", "of", "to", "in", "and", "is", "it", "that")
-
-
-def n_chars_col(text: Column | str) -> Column:
-    return F.length(_c(text)).cast("long")
 
 
 def punct_count_col(text: Column | str) -> Column:
@@ -255,13 +269,6 @@ def ngrams_from_tokens(toks: Column, n: int) -> Column:
     )
 
 
-def ngram_cols(text: Column | str, n: int = 2) -> Column:
-    """Inline-convenience form of ``ngrams_from_tokens`` for SHORT texts —
-    the embedded tokenizer re-runs per gram (see ngrams_from_tokens); bulk
-    paths (``ngram_vocab``) materialize the token array first."""
-    return ngrams_from_tokens(tokens_col(text), n)
-
-
 def ngram_vocab(df, text_col: str = "text", *, n: int = 2, top_k: int = 100):
     """Corpus-wide top-k word n-grams — the vocabulary-building pass of a
     training-data pipeline.
@@ -275,8 +282,7 @@ def ngram_vocab(df, text_col: str = "text", *, n: int = 2, top_k: int = 100):
     ngram).limit(k)`` which Spark executes as TakeOrdered (per-partition
     top-k + driver merge, never a global sort). The tie-break on the gram
     string makes the k boundary deterministic."""
-    spread = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-    toks = spread.select(tokens_col(F.col(text_col)).alias("_toks"))
+    toks = spread(df).select(tokens_col(F.col(text_col)).alias("_toks"))
     grams = toks.select(F.explode(ngrams_from_tokens(F.col("_toks"), n)).alias("ngram"))
     return (
         grams.groupBy("ngram")
@@ -392,8 +398,7 @@ def gopher_repetition_signals(
     # repo's repartition-before-heavy-math rule); the repartition Exchange
     # is additionally REUSED by both join branches below, so the scan +
     # split + tokenize run once instead of once per branch
-    spread = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-    base = spread.select(
+    base = spread(df).select(
         F.col(id_col),
         F.col(text_col).alias("_t"),
         F.split(F.col(text_col), "\n").alias("_lines"),

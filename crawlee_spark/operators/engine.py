@@ -6,7 +6,7 @@ One round = the set-wise equivalent of BasicCrawler._runTaskFunction
   claim (O2-O5, C3) → fetch = frontier ⋈ pages (S11 replacement) →
   MIME/status gate (E5, E9) → extract text + links (E1-E2 Arrow UDFs) →
   gate links (F1-F9) → dedup + enqueue (D5/D7) → outcomes: success /
-  retry / fail (C4-C5, O8-O9) → stats append (C10) → snapshot commit (C11).
+  retry / fail (C4-C5, O8-O9) → stats append (C10) → outcome delta commit (C11).
 
 Retry policy (basic-crawler.ts:1881-1941):
 - blocked statuses {401,403,429} (session_pool/consts.ts:1) ⇒ session
@@ -22,7 +22,7 @@ Retry policy (basic-crawler.ts:1881-1941):
 
 Determinism: no wall clock anywhere — order_no is a driver sequence,
 leases are round numbers, handled_at derives from warc-epoch + round.
-A killed run resumes from the last committed snapshot and replays the
+A killed run resumes from the last committed delta and replays the
 round identically (tested in tests/test_engine.py::test_resume).
 """
 
@@ -586,18 +586,13 @@ class CrawlEngine:
         # by round-number comparison and the rows are re-claimed — no unlock
         # protocol. This is also the round-start commit (the round counter
         # advances here, the outcome delta below completes the round).
-        # Only with merge-on-read: a full snapshot rewrite just to stamp
-        # leases would be the 2 TB-per-round pattern this design removes.
-        round_committed = False
-        if self.store.merge_on_read:
-            leased = (
-                claimed.withColumn("lease_until", F.lit(round_id).cast("long"))
-                .withColumn("state", F.lit(STATE_BEFORE_NAV))
-                .withColumn("round_id", F.lit(round_id))
-                .select(*[f.name for f in FRONTIER_SCHEMA.fields])
-            )
-            self.store.commit_delta(leased, round_increment=True)
-            round_committed = True
+        leased = (
+            claimed.withColumn("lease_until", F.lit(round_id).cast("long"))
+            .withColumn("state", F.lit(STATE_BEFORE_NAV))
+            .withColumn("round_id", F.lit(round_id))
+            .select(*[f.name for f in FRONTIER_SCHEMA.fields])
+        )
+        self.store.commit_delta(leased, round_increment=True)
 
         # ---- fetch = join against pages (left: missing page ⇒ fetch error);
         # the claim urls broadcast-semi-join prunes the corpus scan (see
@@ -1048,25 +1043,12 @@ class CrawlEngine:
         }
 
         # ---- MERGE outcomes back into the frontier + append fresh links.
-        # The touched set is just the claimed rows' new versions + fresh rows;
-        # with merge-on-read that's ALL we write (O(claimed+fresh) per round);
-        # otherwise the untouched remainder is carried by an anti-join union
-        # (never a frontier-wide equality join against the update set).
+        # The touched set is just the claimed rows' new versions + fresh rows,
+        # and that is ALL we write: one O(claimed+fresh) delta per round,
+        # never a frontier-wide rewrite or join (compaction rewrites the base).
         updated = self._outcome_rows(classified, round_id, r_lo, r_span)
         delta = updated if fresh_rows is None else updated.unionByName(fresh_rows)
-        if self.store.merge_on_read:
-            self.store.commit_delta(
-                delta, round_increment=not round_committed, extra=counter_extra
-            )
-        else:
-            untouched = frontier.join(
-                classified.select("request_id"), "request_id", "left_anti"
-            )
-            self.store.commit(
-                untouched.unionByName(delta),
-                round_increment=not round_committed,
-                extra=counter_extra,
-            )
+        self.store.commit_delta(delta, extra=counter_extra)
 
         return {
             "round": round_id,

@@ -18,17 +18,19 @@ Reference semantics re-expressed set-wise:
 - queue metadata counters (request-queue.ts:596-610) are an aggregation view,
   not stored state.
 
-Storage: parquet snapshot directories + a JSON manifest (atomic rename), one
-snapshot per committed round — the sandbox stand-in for an Iceberg table where
-each round is a MERGE INTO commit and resume reads the last snapshot. The
-snapshot layout keeps the same two properties the engine needs from Iceberg:
-transactional read-your-writes between rounds, and time-travel for resume.
+Storage: a parquet base snapshot plus merge-on-read delta directories, tracked
+by a JSON manifest (atomic rename) — the sandbox stand-in for an Iceberg table.
+Each round commits only the rows it touched as deltas (``commit_delta``); reads
+resolve the latest version per ``request_id``; every ``compact_every`` deltas
+the base is rewritten (``commit``). The layout keeps the same two properties
+the engine needs from Iceberg: transactional read-your-writes between rounds,
+and time-travel for resume.
 
 Scale notes (10^10-row frontier):
 - the frontier is hash-distributed by ``request_id`` (dedup join key), so the
   anti-join is a co-partitioned shuffle; AQE handles skew.
-- per-round writes rewrite only rows that changed in this sandbox backend's
-  snapshot; with Iceberg this becomes merge-on-read deltas + compaction.
+- per-round writes are O(claimed + fresh) deltas, never a frontier rewrite;
+  only compaction (1 in ``compact_every`` commits) rewrites the base.
 - ``html`` never enters the frontier — scheduling reads only narrow columns
   (Catalyst prunes the parquet scan to the scheduling columns).
 """
@@ -151,7 +153,7 @@ def candidates_to_requests(
 
 @dataclass
 class FrontierStore:
-    """Snapshot-per-round frontier table with a JSON manifest.
+    """Merge-on-read frontier table: base snapshot + deltas + JSON manifest.
 
     The manifest carries the driver-side scalars that make runs deterministic
     and resumable: the monotonic ``order_seq`` (replaces Date.now() orderNo),
@@ -162,13 +164,6 @@ class FrontierStore:
     root: str
     num_partitions: int = 32
     bloom_buckets: int | None = None  # enable D7 prefilter with this many buckets
-    # Merge-on-read is the DEFAULT commit path: each round writes only the
-    # rows it touched (O(claimed+fresh)) and reads resolve last-writer-wins;
-    # the full-snapshot commit() remains as the compaction mechanism. At the
-    # design point (10^10-row frontier) a full rewrite per round is ~2 TB of
-    # writes for a few hundred MB of change — merge_on_read=False is only for
-    # tiny tables and the equivalence test.
-    merge_on_read: bool = True
     compact_every: int = 8  # deltas per base rewrite
     # MOR reads anti-join the base against the outstanding delta ids; the ids
     # are O(claimed+fresh) so they broadcast. Above this many outstanding
@@ -269,9 +264,9 @@ class FrontierStore:
     def read(self, columns: list[str] | None = None) -> DataFrame:
         """Current frontier (empty frame before the first commit).
 
-        With merge-on-read the merge NEVER shuffles the base: last-writer-wins
-        is resolved among the deltas alone (they are O(claimed+fresh) rows —
-        a small ``max_by`` by delta sequence), and the base is merged as
+        The merge NEVER shuffles the base: last-writer-wins is resolved
+        among the deltas alone (they are O(claimed+fresh) rows — a small
+        ``max_by`` by delta sequence), and the base is merged as
 
             base LEFT ANTI JOIN broadcast(delta_ids)  ∪  resolved_deltas
 
@@ -459,8 +454,10 @@ class FrontierStore:
             fast = fast.join(delta_ids, "request_id", "left_anti")
         return fast.unionByName(checked)
 
-    def commit(self, df: DataFrame, *, round_increment: bool = False, extra: dict | None = None) -> int:
-        """Write a new snapshot and atomically advance the manifest.
+    def commit(self, df: DataFrame) -> int:
+        """Write ``df`` as the new base snapshot and atomically advance the
+        manifest, superseding any outstanding deltas. Two callers: compaction
+        (``commit_delta``) and the bulk seed in ``add_requests``.
 
         The frontier is repartitioned by ``request_id`` so the next round's
         anti-join and claim reads are well distributed (Iceberg analog:
@@ -473,13 +470,9 @@ class FrontierStore:
             .parquet(out_dir)
         )
         self._manifest["snapshot"] = snap
-        if round_increment:
-            self._manifest["round"] += 1
-        if extra:
-            self._manifest.update(extra)
         # per-partition lineage: rows + handled/failed counts per written
-        # file, so every snapshot records which partitions this round touched
-        # and how (the Iceberg analog reads this from data-file stats)
+        # file, so every snapshot records its partitions and their state
+        # (the Iceberg analog reads this from data-file stats)
         lineage = [
             {
                 "file": os.path.basename(r["file"]),
@@ -717,8 +710,8 @@ class FrontierStore:
         """O(1) queue counters from the manifest — no frontier scan.
 
         ``total_requests`` is maintained by ``prepare_fresh`` (every enqueue
-        path), ``handled_total``/``failed_total`` by the engine's per-round
-        commit extras, and all three are resynced from data-file lineage at
+        path), ``handled_total``/``failed_total`` by the engine's outcome-delta
+        extras, and all three are resynced from data-file lineage at
         every full-snapshot commit (compaction). At a 10^10-row frontier the
         old aggregate-the-table version was an O(frontier) job per
         monitoring call. ``exact=True`` recounts from data (tests/debug)."""

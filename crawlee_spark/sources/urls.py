@@ -17,7 +17,7 @@ Reference behaviors re-expressed set-wise:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # URL_NO_COMMAS_REGEX (general.ts:8-9) in Java regex syntax; (?iu) ≈ /iu.
@@ -40,14 +40,6 @@ def extract_urls_col(text: Column | str, url_regex: str = URL_NO_COMMAS_REGEX) -
     newline (no whitespace is admitted anywhere in it)."""
     c = F.col(text) if isinstance(text, str) else text
     return F.regexp_extract_all(c, F.lit(url_regex), F.lit(0))
-
-
-def extract_urls_from_text(df: DataFrame, text_col: str = "value") -> DataFrame:
-    """S3/E8: text lines → one row per extracted URL (order preserved within
-    a line by position)."""
-    return df.select(
-        F.posexplode(extract_urls_col(text_col)).alias("pos", "url")
-    ).select("url", "pos")
 
 
 def fix_google_sheets_url_col(url: Column | str) -> Column:

@@ -37,7 +37,8 @@ def mark_handled(store, request_id, round_id):
             F.to_timestamp(F.lit("2026-01-01 00:00:00")),
         ).otherwise(F.col("handled_at")),
     )
-    store.commit(f, round_increment=True)
+    store._manifest["round"] += 1
+    store.commit(f)
 
 
 def reclaim_forefront(store, request_id):

@@ -28,8 +28,7 @@ def test_bloom_exact_across_mor_deltas(spark, tmp_store_dir):
     are anti-joined exactly — and dedup stays exact against snapshot+delta
     contents (a delta-added id must never pass as definitely-new)."""
     store = FrontierStore(
-        spark, tmp_store_dir, num_partitions=4, bloom_buckets=8,
-        merge_on_read=True, compact_every=100,
+        spark, tmp_store_dir, num_partitions=4, bloom_buckets=8, compact_every=100,
     )
     store.add_requests(
         spark.createDataFrame([(f"http://a.com/{i}",) for i in range(40)], "url string")
@@ -72,8 +71,7 @@ def test_bloom_filters_cover_every_frontier_id(spark, tmp_store_dir):
     from crawlee_spark.operators.dedup_filters import split_candidates
 
     store = FrontierStore(
-        spark, tmp_store_dir, num_partitions=4, bloom_buckets=8,
-        merge_on_read=True, compact_every=100,
+        spark, tmp_store_dir, num_partitions=4, bloom_buckets=8, compact_every=100,
     )
     store.add_requests(
         spark.createDataFrame([(f"http://b.com/{i}",) for i in range(25)], "url string")
@@ -97,8 +95,7 @@ def test_compaction_carries_filters_without_rebuild(spark, tmp_store_dir, monkey
     import crawlee_spark.operators.dedup_filters as df_mod
 
     store = FrontierStore(
-        spark, tmp_store_dir, num_partitions=4, bloom_buckets=8,
-        merge_on_read=True, compact_every=2,
+        spark, tmp_store_dir, num_partitions=4, bloom_buckets=8, compact_every=2,
     )
     store.add_requests(
         spark.createDataFrame([(f"http://a.com/{i}",) for i in range(30)], "url string")

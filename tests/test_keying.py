@@ -131,6 +131,12 @@ def test_fast_path_regex_is_identity_on_normalized_urls():
     tails = ["", "?b=2&a=1", "?utm_source=x", "#frag", "?a=1#f", "#"]
     urls = {f"{s}://{h}{p}{t}" for s, h, p, t in itertools.product(schemes, hosts, paths, tails)}
     urls |= {" https://a.com ", "https://a.com/x/", "mailto:x@y", "", "https://", "https:///p"}
+    # whitespace/control characters the normalizer strips or drops: trailing
+    # (incl. a newline, which ``$`` would let through) and embedded tab/CR/LF
+    odd = [" ", "\n", "\t", "\r", "\x0b", "\x1f", "\xa0"]
+    urls |= {f"http://a.com{c}" for c in odd}
+    urls |= {f"http://a.com/x{c}" for c in odd}
+    urls |= {f"http://a.com/a{c}b" for c in odd}
     n_fast = 0
     for u in urls:
         if _NORMALIZED_URL_RE.match(u):

@@ -102,8 +102,8 @@ def simulate():
     return trace, set(seen)
 
 
-def run_engine(spark, tmp_store_dir):
-    store = FrontierStore(spark, tmp_store_dir, num_partitions=4)
+def run_engine(spark, tmp_store_dir, compact_every):
+    store = FrontierStore(spark, tmp_store_dir, num_partitions=4, compact_every=compact_every)
     engine = CrawlEngine(
         spark,
         store,
@@ -127,9 +127,12 @@ def run_engine(spark, tmp_store_dir):
     return trace, seen_ids
 
 
-def test_crawl_order_and_seen_set_parity(spark, tmp_store_dir):
+# 8 is the store default; 2 compacts each round's lease + outcome delta
+# pair, so the trace crosses a base rewrite after every round
+@pytest.mark.parametrize("compact_every", [8, 2])
+def test_crawl_order_and_seen_set_parity(spark, tmp_store_dir, compact_every):
     expected_trace, expected_seen = simulate()
-    got_trace, got_seen = run_engine(spark, tmp_store_dir)
+    got_trace, got_seen = run_engine(spark, tmp_store_dir, compact_every)
     assert got_seen == expected_seen  # identical URL-seen set (request ids)
     assert got_trace == expected_trace  # identical claim order, every round
 

@@ -111,7 +111,7 @@ def test_mor_delta_broadcast_gates_on_bytes(spark, tmp_path_factory):
     on a toy delta Catalyst would otherwise broadcast regardless."""
     d = str(tmp_path_factory.mktemp("plans-mor-bytes"))
     s = FrontierStore(
-        spark, d, num_partitions=4, merge_on_read=True, compact_every=100,
+        spark, d, num_partitions=4, compact_every=100,
         delta_broadcast_max_bytes=10,  # ids are ~15 B each: always over
     )
     s.add_requests(
@@ -147,7 +147,7 @@ def test_mor_read_merges_without_frontier_shuffle(spark, tmp_path_factory):
     (VERDICT r2 item 1 — the old groupBy(request_id).max_by over base∪deltas
     was a full-frontier wide-row shuffle on every read)."""
     d = str(tmp_path_factory.mktemp("plans-mor"))
-    s = FrontierStore(spark, d, num_partitions=4, merge_on_read=True, compact_every=100)
+    s = FrontierStore(spark, d, num_partitions=4, compact_every=100)
     s.add_requests(
         spark.createDataFrame([(f"http://a.com/{i}",) for i in range(10)], "url string")
     )
