@@ -1,12 +1,18 @@
 """CrawlEngine: the crawl loop as batch-incremental rounds over the frontier.
 
 One round = the set-wise equivalent of BasicCrawler._runTaskFunction
-(basic-crawler.ts:1601-1747) applied to the whole claimable set at once:
+(basic-crawler.ts:1601-1747) applied to the whole claimable set at once.
+``CrawlEngine.run_round`` is this list of phase methods:
 
-  claim (O2-O5, C3) → fetch = frontier ⋈ pages (S11 replacement) →
-  MIME/status gate (E5, E9) → extract text + links (E1-E2 Arrow UDFs) →
-  gate links (F1-F9) → dedup + enqueue (D5/D7) → outcomes: success /
-  retry / fail (C4-C5, O8-O9) → stats append (C10) → outcome delta commit (C11).
+  _claim (O2-O5, C3, sessions C6, proxies) → _lease (O5 lease delta) →
+  _fetch (frontier ⋈ pages, S11 replacement, + robots re-check) →
+  _classify (MIME/status gate E5, outcomes C4-C5, C7) →
+  _extract (text + links + blocked probe, E1-E2/E9 Arrow UDF) →
+  _run_hooks (Router handlers C13, errorHandler) → _tally (one aggregate) →
+  _write_side_outputs (skipped F8, results S7, failedRequestHandler) →
+  _enqueue_links (gate F1-F9 → dedup D5/D7) →
+  _log_outcomes (stats C10, session pool, proxy tiers) →
+  _commit (outcome delta: success / retry / fail, O8-O9, C11).
 
 Retry policy (basic-crawler.ts:1881-1941):
 - blocked statuses {401,403,429} (session_pool/consts.ts:1) ⇒ session
@@ -32,7 +38,7 @@ import os
 from dataclasses import dataclass, field
 from typing import TYPE_CHECKING, Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -88,6 +94,34 @@ def fetch_join(claimed: DataFrame, pages: DataFrame, *, prune_pages: bool = True
     claim_urls = claimed.select(F.col("url").alias("page_url")).distinct()
     relevant = pages.join(F.broadcast(claim_urls), "page_url", "left_semi")
     return claimed.join(relevant, claimed["url"] == relevant["page_url"], "left").drop("page_url")
+
+
+def _skip_navigation() -> Column:
+    """request.skipNavigation (request.ts:268-277: stored in
+    userData.__crawlee.skipNavigation — same wire format here)."""
+    return F.coalesce(
+        F.get_json_object(F.col("user_data"), "$.__crawlee.skipNavigation").cast("boolean"),
+        F.lit(False),
+    )
+
+
+def _push_error(msg: Column) -> Column:
+    """pushErrorMessage: ``error_messages`` with ``msg`` appended, unchanged
+    when ``msg`` is null."""
+    return F.when(
+        msg.isNotNull(),
+        F.concat(F.coalesce(F.col("error_messages"), F.array()), F.array(msg)),
+    ).otherwise(F.col("error_messages"))
+
+
+def _outcome_label() -> Column:
+    """The logged ``outcome``: a redirect skip is handled and finished, so it
+    is logged as a success."""
+    return (
+        F.when(F.col("_outcome") == "skip_redirect", F.lit("success"))
+        .otherwise(F.col("_outcome"))
+        .alias("outcome")
+    )
 
 
 def maybe_broadcast(df: DataFrame, max_rows: int, max_bytes: int | None = None) -> DataFrame:
@@ -203,11 +237,10 @@ class CrawlEngine:
     # back to the plain (corpus-shuffling) join rather than a giant broadcast
     claims_broadcast_max_rows: int = 4_000_000
     claims_broadcast_max_bytes: int = 128 << 20
-    # None = auto: prune only when the pages source's file footprint exceeds
+    # prune only when the pages source's file footprint reaches
     # pages_prune_min_bytes — below that a full shuffle is cheaper than the
     # distinct+broadcast+semi-join machinery (measured −7% at a 40 MB corpus,
     # while at the 100 TB design point the plain join shuffles the corpus)
-    prune_pages_fetch: bool | None = None
     pages_prune_min_bytes: int = 1 << 30
 
     def __post_init__(self):
@@ -274,17 +307,13 @@ class CrawlEngine:
         # size the pages source ONCE (driver metadata only) to pick the
         # fetch-join strategy; sources with no file footprint (synthesized
         # test frames) stay on the plain join
-        self._prune_fetch = self.prune_pages_fetch
-        if self._prune_fetch is None:
-            try:
-                from urllib.parse import urlparse
+        try:
+            from urllib.parse import urlparse
 
-                total = sum(
-                    os.path.getsize(urlparse(f).path) for f in self._pages.inputFiles()
-                )
-            except Exception:
-                total = 0
-            self._prune_fetch = total >= self.pages_prune_min_bytes
+            total = sum(os.path.getsize(urlparse(f).path) for f in self._pages.inputFiles())
+        except Exception:
+            total = 0
+        self._prune_fetch = total >= self.pages_prune_min_bytes
 
     # -- derived frames -------------------------------------------------------
     def results(self) -> DataFrame:
@@ -526,6 +555,38 @@ class CrawlEngine:
             return None
         return max(0, cap - self.store._manifest["total_requests"])
 
+    # -- shared decision rules ------------------------------------------------
+    def _retry_or_fail(self) -> Column:
+        """A retryable error (basic-crawler.ts:1881-1941): retry while
+        retryCount < (request.maxRetries ?? maxRequestRetries) and the
+        request is not noRetry, else a final fail."""
+        can_retry = F.col("retry_count") < F.coalesce(
+            F.col("max_retries"), F.lit(self.options.max_request_retries)
+        )
+        return F.when(can_retry & ~F.col("no_retry"), F.lit("retry")).otherwise(F.lit("fail"))
+
+    def _rotate_session(self) -> Column:
+        """A blocked status or page: rotate the session WITHOUT consuming
+        retryCount until maxSessionRotations is hit (basic-crawler.ts:
+        1870-1876), then an ordinary retry-or-fail."""
+        return F.when(
+            F.col("session_rotation_count") < self.options.max_session_rotations,
+            F.lit("session_retry"),
+        ).otherwise(self._retry_or_fail())
+
+    def _with_robots_ok(self, df: DataFrame) -> DataFrame:
+        """``df`` plus ``_robots_ok``: the request's url against its host's
+        robots.txt (always true without a robots source)."""
+        if self.robots is None:
+            return df.withColumn("_robots_ok", F.lit(True))
+        from crawlee_spark.functions.robots import robots_allowed_udf
+
+        return (
+            df.join(self._robots, "host", "left")
+            .withColumn("_robots_ok", robots_allowed_udf("url", "robots_txt"))
+            .drop("robots_txt")
+        )
+
     # -- seeding ---------------------------------------------------------------
     def add_seeds(self, seeds: DataFrame, forefront: bool = False) -> None:
         """addRequests(seeds) with the depth/robots gates of
@@ -533,24 +594,45 @@ class CrawlEngine:
         shaped = candidates_to_requests(seeds, forefront=forefront)
         if self.options.max_crawl_depth is not None:
             shaped = shaped.filter(F.col("crawl_depth") <= self.options.max_crawl_depth)
-        if self.robots is not None:
-            from crawlee_spark.functions.robots import robots_allowed_udf
-
-            shaped = (
-                shaped.join(self._robots, "host", "left")
-                .withColumn("_allowed", robots_allowed_udf("url", "robots_txt"))
-                .filter(F.col("_allowed"))
-                .drop("_allowed", "robots_txt")
-            )
+        shaped = self._with_robots_ok(shaped).filter(F.col("_robots_ok")).drop("_robots_ok")
         self.store.add_requests(shaped, forefront=forefront, max_new=self._remaining_budget())
 
     # -- one round --------------------------------------------------------------
     def run_round(self) -> dict:
-        """Execute one scheduling round; returns round metrics."""
-        round_id = self.store.round + 1
-        frontier = self.store.read()
+        """Execute one scheduling round; returns round metrics.
 
-        claimed = claim_round(frontier, round_id, self.policy)
+        The round is the phase list of the module docstring. Each phase takes
+        the frames and scalars it needs and returns only what later phases
+        read; the two commits (lease, outcome delta) bracket everything."""
+        round_id = self.store.round + 1
+        claimed, n_claimed, claim_url_bytes = self._claim(round_id)
+        if n_claimed == 0:
+            return {"round": round_id, "claimed": 0, "done": True}
+        self._lease(claimed, round_id)
+        fetched = self._fetch(claimed, n_claimed, claim_url_bytes)
+        classified = self._run_hooks(self._extract(self._classify(fetched)))
+        cnts, n_links, n_emitted, r_lo, r_span = self._tally(classified)
+        self._write_side_outputs(classified, round_id)
+        fresh_rows, n_enqueued = None, 0
+        if n_links or n_emitted:
+            fresh_rows, n_enqueued = self._enqueue_links(classified, round_id, n_claimed)
+        self._log_outcomes(classified, round_id)
+        self._commit(classified, round_id, cnts, r_lo, r_span, fresh_rows)
+        return {
+            "round": round_id,
+            "claimed": n_claimed,
+            "succeeded": cnts.get("success", 0),
+            "links_found": n_links,
+            "enqueued": n_enqueued,
+            "done": False,
+        }
+
+    def _claim(self, round_id: int) -> tuple[DataFrame, int, int]:
+        """Claim the round (O2-O5, C3) under the F6 budget, rotate sessions
+        (C6) and proxies onto it and pin it. Returns the claim set, its row
+        count and its url byte mass — the fetch-join prune broadcasts those
+        urls, so the guard checks bytes, not just rows."""
+        claimed = claim_round(self.store.read(), round_id, self.policy)
         if self.options.max_requests_per_crawl is not None:
             # O(1) manifest counter — not a frontier aggregate per round
             handled = self.store._manifest["handled_total"]
@@ -567,25 +649,21 @@ class CrawlEngine:
         if self.options.proxy_config is not None:
             claimed = self._assign_proxies(claimed)
         claimed = claimed.localCheckpoint(eager=True)  # pin the claim set
-        # one aggregate gives the claim count AND the exact url byte mass the
-        # fetch-join prune would broadcast (guard on bytes, not just rows)
-        _cstats = claimed.agg(
+        stats = claimed.agg(
             F.count("*").alias("n"),
             F.sum(F.octet_length("url")).alias("url_bytes"),
         ).collect()[0]
-        n_claimed = _cstats["n"]
-        claim_url_bytes = int(_cstats["url_bytes"] or 0)
-        if n_claimed == 0:
-            return {"round": round_id, "claimed": 0, "done": True}
+        return claimed, stats["n"], int(stats["url_bytes"] or 0)
 
-        # ---- O5 lease stamp: commit the claimed set as a mid-round delta
-        # (lease_until = this round, state BEFORE_NAV) — the live analog of
-        # listAndLockHead (request-queue.ts:228-298). A second writer at the
-        # same round sees the lease as unexpired and cannot re-claim; a crash
-        # after this commit resumes at round_id+1 where the lease has expired
-        # by round-number comparison and the rows are re-claimed — no unlock
-        # protocol. This is also the round-start commit (the round counter
-        # advances here, the outcome delta below completes the round).
+    def _lease(self, claimed: DataFrame, round_id: int) -> None:
+        """O5 lease stamp: commit the claimed set as a mid-round delta
+        (lease_until = this round, state BEFORE_NAV) — the live analog of
+        listAndLockHead (request-queue.ts:228-298). A second writer at the
+        same round sees the lease as unexpired and cannot re-claim; a crash
+        after this commit resumes at round_id+1 where the lease has expired
+        by round-number comparison and the rows are re-claimed — no unlock
+        protocol. This is also the round-start commit (the round counter
+        advances here, the outcome delta of ``_commit`` completes the round)."""
         leased = (
             claimed.withColumn("lease_until", F.lit(round_id).cast("long"))
             .withColumn("state", F.lit(STATE_BEFORE_NAV))
@@ -594,9 +672,11 @@ class CrawlEngine:
         )
         self.store.commit_delta(leased, round_increment=True)
 
-        # ---- fetch = join against pages (left: missing page ⇒ fetch error);
-        # the claim urls broadcast-semi-join prunes the corpus scan (see
-        # fetch_join) so the pages store is never shuffled
+    def _fetch(self, claimed: DataFrame, n_claimed: int, claim_url_bytes: int) -> DataFrame:
+        """fetch = join against pages (left: missing page ⇒ fetch error); the
+        claim urls broadcast-semi-join prunes the corpus scan (see
+        fetch_join) so the pages store is never shuffled. Then the robots
+        re-check at fetch time (basic-crawler.ts:1627-1639)."""
         fetched = fetch_join(
             claimed,
             self._pages,
@@ -604,72 +684,40 @@ class CrawlEngine:
             and n_claimed <= self.claims_broadcast_max_rows
             and claim_url_bytes <= self.claims_broadcast_max_bytes,
         )
+        return self._with_robots_ok(fetched)
 
-        # ---- robots re-check at fetch time (basic-crawler.ts:1627-1639)
-        if self.robots is not None:
-            from crawlee_spark.functions.robots import robots_allowed_udf
+    def _classify(self, fetched: DataFrame) -> DataFrame:
+        """Outcome classification (C4 decision table): ``_outcome`` and the
+        attempt's ``_error`` from robots, status, MIME, redirect and the C7
+        handler budget."""
+        from crawlee_spark.operators.enqueue import matches_enqueue_strategy_col
 
-            fetched = (
-                fetched.join(self._robots, "host", "left")
-                .withColumn("_robots_ok", robots_allowed_udf("url", "robots_txt"))
-                .drop("robots_txt")
-            )
-        else:
-            fetched = fetched.withColumn("_robots_ok", F.lit(True))
-
-        # ---- outcome classification (C4 decision table)
         mime_ok = F.lit(False)
         for m in SUPPORTED_MIME + tuple(self.options.additional_mime_types):
             mime_ok = mime_ok | F.col("content_type").startswith(m)
-        can_retry = F.col("retry_count") < F.coalesce(
-            F.col("max_retries"), F.lit(self.options.max_request_retries)
-        )
         # F2: post-load strategy re-check against the final (redirected) URL
-        from crawlee_spark.operators.enqueue import matches_enqueue_strategy_col
-
         strategy_ok = matches_enqueue_strategy_col("url", "loaded_url", "enqueue_strategy")
-        # request.skipNavigation (request.ts:268-277: stored in
-        # userData.__crawlee.skipNavigation — same wire format here): the
-        # fetch outcome is ignored entirely (http-crawler.ts:519 skips
-        # navigation, response parsing, blocked/status gating and the
-        # redirect re-check) and the request goes straight to the handler
-        # stage as a success with no parsed body. The robots re-check still
-        # applies — it runs before _runRequestHandler in the reference.
-        skip_nav = F.coalesce(
-            F.get_json_object(F.col("user_data"), "$.__crawlee.skipNavigation").cast(
-                "boolean"
-            ),
-            F.lit(False),
-        )
-        classified = fetched.withColumn(
+        return fetched.withColumn(
             "_outcome",
             F.when(~F.col("_robots_ok"), F.lit("skip_robots"))
-            .when(skip_nav, F.lit("success"))
-            .when(
-                # blocked statuses BEFORE the redirect-strategy recheck:
-                # _throwOnBlockedRequest (http-crawler.ts:547) fires before
-                # requestMatchesEnqueueStrategy (:556) — a redirect landing on
-                # 401/403/429 session-rotates, it is not permanently SKIPPED
-                F.col("status_code").isin(*BLOCKED_STATUS_CODES),
-                F.when(
-                    F.col("session_rotation_count") < self.options.max_session_rotations,
-                    F.lit("session_retry"),
-                ).otherwise(F.when(can_retry & ~F.col("no_retry"), F.lit("retry")).otherwise(F.lit("fail"))),
-            )
+            # skipNavigation ignores the fetch outcome entirely
+            # (http-crawler.ts:519 skips navigation, response parsing,
+            # blocked/status gating and the redirect re-check); the robots
+            # re-check still applies — it runs before _runRequestHandler
+            .when(_skip_navigation(), F.lit("success"))
+            # blocked statuses BEFORE the redirect-strategy recheck:
+            # _throwOnBlockedRequest (http-crawler.ts:547) fires before
+            # requestMatchesEnqueueStrategy (:556) — a redirect landing on
+            # 401/403/429 session-rotates, it is not permanently SKIPPED
+            .when(F.col("status_code").isin(*BLOCKED_STATUS_CODES), self._rotate_session())
             .when(
                 F.col("html").isNotNull() & ~strategy_ok, F.lit("skip_redirect")
             )  # basic-crawler.ts:2124-2168 / http-crawler.ts:556-568: noRetry,
             #    state SKIPPED, reason 'redirect', still marked handled
-            .when(
-                F.col("html").isNull() | (F.col("status_code") >= 500),
-                F.when(can_retry & ~F.col("no_retry"), F.lit("retry")).otherwise(F.lit("fail")),
-            )
+            .when(F.col("html").isNull() | (F.col("status_code") >= 500), self._retry_or_fail())
             .when((F.col("status_code") >= 400) | ~mime_ok, F.lit("fail"))  # non-retryable
-            .when(
-                # C7: handler over budget ⇒ retryable TimeoutError
-                self._handler_timeout_pred(),
-                F.when(can_retry & ~F.col("no_retry"), F.lit("retry")).otherwise(F.lit("fail")),
-            )
+            # C7: handler over budget ⇒ retryable TimeoutError
+            .when(self._handler_timeout_pred(), self._retry_or_fail())
             .otherwise(F.lit("success")),
         ).withColumn(
             "_error",
@@ -689,12 +737,16 @@ class CrawlEngine:
             )
             .otherwise(F.concat(F.lit("Request failed with status "), F.col("status_code"))),
         )
-        # ---- fused single-parse extraction over preliminary successes.
-        # One DOM parse yields text (E2, charset-decoded per E6), links (E1,
-        # resolved against the redirect-final URL) and the RETRY_CSS_SELECTORS
-        # probe (E9): a 200 carrying a challenge page is reclassified as a
-        # session error exactly like a blocked status code
-        # (isRequestBlocked, http-crawler.ts:600-614 → SessionError path).
+
+    def _extract(self, classified: DataFrame) -> DataFrame:
+        """Fused single-parse extraction over preliminary successes, then
+        the round's narrow checkpoint. One DOM parse yields text (E2,
+        charset-decoded per E6), links (E1, resolved against the
+        redirect-final URL) and the RETRY_CSS_SELECTORS probe (E9): a 200
+        carrying a challenge page is reclassified as a session error exactly
+        like a blocked status code (isRequestBlocked, http-crawler.ts:600-614
+        → SessionError path)."""
+        skip_nav = _skip_navigation()
         succ0 = classified.filter((F.col("_outcome") == "success") & ~skip_nav)
         rest = (
             classified.filter((F.col("_outcome") != "success") | skip_nav)
@@ -719,16 +771,7 @@ class CrawlEngine:
         ).drop("_page")
         is_blocked_page = F.size("_blocked_sel") > 0
         ext = ext.withColumn(
-            "_outcome",
-            F.when(
-                is_blocked_page,
-                F.when(
-                    F.col("session_rotation_count") < self.options.max_session_rotations,
-                    F.lit("session_retry"),
-                ).otherwise(
-                    F.when(can_retry & ~F.col("no_retry"), F.lit("retry")).otherwise(F.lit("fail"))
-                ),
-            ).otherwise(F.col("_outcome")),
+            "_outcome", F.when(is_blocked_page, self._rotate_session()).otherwise(F.col("_outcome"))
         ).withColumn(
             "_error",
             F.when(
@@ -739,39 +782,40 @@ class CrawlEngine:
                 ),
             ).otherwise(F.col("_error")),
         )
-        # raw bodies and probe scratch never outlive extraction: drop them so
-        # the checkpointed round frame is narrow — at a 512k-claim round the
-        # html column alone would pin tens of GB of executor storage
+        round_frame = rest.unionByName(ext)
         if self.options.save_error_snapshots:
             # opt-in ErrorSnapshotter path: the snapshot capture needs the
             # bodies of errored rows, so pin the WIDE frame once (the
-            # extraction UDF still runs exactly once — here), capture, then
-            # fall through to the usual narrow checkpoint. The extra wide
+            # extraction UDF still runs exactly once — here). The extra wide
             # pin is this feature's documented cost, mirroring the
             # reference's own snapshot-write overhead.
-            wide = rest.unionByName(ext).localCheckpoint(eager=True)
-            self._save_error_snapshots(wide)
-            classified = wide.drop("html", "_blocked_sel").localCheckpoint(eager=True)
-        else:
-            classified = rest.unionByName(ext).drop("html", "_blocked_sel").localCheckpoint(eager=True)
-        # ---- user hooks AFTER the extraction checkpoint (their plans — and
-        # the router's no-route probe — must never recompute the extraction
-        # UDF) but BEFORE the round aggregate, so their reclassifications
-        # (handler throw -> retry, errorHandler noRetry -> fail) land in the
-        # counters and the outcome merge for free. A second narrow
-        # checkpoint pins the hook outputs; rounds without hooks keep the
-        # single-checkpoint plan unchanged.
+            round_frame = round_frame.localCheckpoint(eager=True)
+            self._save_error_snapshots(round_frame)
+        # raw bodies and probe scratch never outlive extraction: drop them so
+        # the checkpointed round frame is narrow — at a 512k-claim round the
+        # html column alone would pin tens of GB of executor storage
+        return round_frame.drop("html", "_blocked_sel").localCheckpoint(eager=True)
+
+    def _run_hooks(self, classified: DataFrame) -> DataFrame:
+        """User hooks AFTER the extraction checkpoint (their plans — and the
+        router's no-route probe — must never recompute the extraction UDF)
+        but BEFORE the round aggregate, so their reclassifications (handler
+        throw -> retry, errorHandler noRetry -> fail) land in the counters
+        and the outcome merge for free. A second narrow checkpoint pins the
+        hook outputs; rounds without hooks keep the single-checkpoint plan."""
+        if not self.options.handlers and self.options.error_handler is None:
+            return classified
         if self.options.handlers:
-            classified = self._apply_request_handlers(classified, can_retry)
+            classified = self._apply_request_handlers(classified)
         if self.options.error_handler is not None:
             classified = self._apply_error_handler(classified)
-        if self.options.handlers or self.options.error_handler is not None:
-            classified = classified.localCheckpoint(eager=True)
+        return classified.localCheckpoint(eager=True)
 
-        # ---- ONE O(claimed) aggregate feeds everything driver-side this
-        # round needs: per-outcome counts (metrics + O(1) counter deltas),
-        # the discovered-link total, and the reclaim re-sequencing range —
-        # previously three separate jobs over the same checkpointed frame.
+    def _tally(self, classified: DataFrame) -> tuple[dict, int, int, int, int]:
+        """ONE O(claimed) aggregate feeds everything driver-side this round
+        needs: per-outcome counts (metrics + O(1) counter deltas), the
+        discovered and handler-emitted link totals, and the reclaim
+        re-sequencing range (lowest |order_no|, span)."""
         from crawlee_spark.operators.handlers import ENQUEUE_URLS_COL
 
         emitted_sz = (
@@ -791,16 +835,21 @@ class CrawlEngine:
             .collect()
         )
         cnts = {r["_outcome"]: int(r["n"]) for r in stat_rows}
-        n_links = sum(int(r["links"] or 0) for r in stat_rows if r["_outcome"] == "success")
-        n_emitted = sum(int(r["emitted"] or 0) for r in stat_rows if r["_outcome"] == "success")
+        succ = [r for r in stat_rows if r["_outcome"] == "success"]
+        n_links = sum(int(r["links"] or 0) for r in succ)
+        n_emitted = sum(int(r["emitted"] or 0) for r in succ)
         reclaim_rows = [r for r in stat_rows if r["_outcome"] in ("retry", "session_retry")]
-        n_reclaims = sum(int(r["n"]) for r in reclaim_rows)
-        r_lo = min((int(r["lo"]) for r in reclaim_rows), default=0)
-        r_hi = max((int(r["hi"]) for r in reclaim_rows), default=0)
-        r_span = (r_hi - r_lo + 1) if n_reclaims else 0
+        if not reclaim_rows:
+            return cnts, n_links, n_emitted, 0, 0
+        r_lo = min(int(r["lo"]) for r in reclaim_rows)
+        r_hi = max(int(r["hi"]) for r in reclaim_rows)
+        return cnts, n_links, n_emitted, r_lo, r_hi - r_lo + 1
 
-        # skip side-outputs (F8 handleSkippedRequest): redirect-strategy skips
-        # (reason 'redirect') and fetch-time robots skips (reason 'robotsTxt',
+    def _write_side_outputs(self, classified: DataFrame, round_id: int) -> None:
+        """Append the skipped side-output, the results dataset and the
+        failedRequestHandler output."""
+        # F8 handleSkippedRequest: redirect-strategy skips (reason
+        # 'redirect') and fetch-time robots skips (reason 'robotsTxt',
         # basic-crawler.ts:1626-1638 — SKIPPED + handled, never failed)
         (
             classified.filter(F.col("_outcome").isin("skip_redirect", "skip_robots"))
@@ -814,21 +863,18 @@ class CrawlEngine:
             .write.mode("append")
             .parquet(self.skipped_dir)
         )
-
-        # successes (post-probe) already carry extracted text + links
-        extracted = classified.filter(F.col("_outcome") == "success")
-
         # results dataset append (S7) — plus any extra columns the user's
         # per-label handlers produced (the requestHandler's pushData analog)
         (
-            extracted.select(
+            classified.filter(F.col("_outcome") == "success")
+            .select(
                 "request_id",
                 "url",
                 # request.loadedUrl = response.url (redirect-aware final URL);
                 # skipNavigation rows never navigated, so loadedUrl stays
                 # unset in the results too (request.ts:268-277 — the round
                 # frame already nulled it, and the coalesce must not refill)
-                F.when(skip_nav, F.lit(None).cast("string"))
+                F.when(_skip_navigation(), F.lit(None).cast("string"))
                 .otherwise(F.coalesce(F.col("loaded_url"), F.col("url")))
                 .alias("loaded_url"),
                 F.col("extracted_text").alias("text"),
@@ -845,151 +891,127 @@ class CrawlEngine:
         if self.options.failed_request_handler is not None:
             self._apply_failed_handler(classified, round_id)
 
-        # ---- discovered links (extracted + handler-emitted) → gate → enqueue
-        new_enqueued = 0
-        fresh_rows = None
-        if n_links or n_emitted:
-            # parent rank: dense 1..|succ| by order_no. Two-phase global rank
-            # (range-partition + per-partition row_number + offsets) over the
-            # NARROW (order_no) projection — an unpartitioned window here
-            # would funnel the whole html-bearing frame through ONE task at a
-            # 512k-claim round — then broadcast-joined back on the unique
-            # order_no (≤ max_concurrency rows, trivially broadcastable).
-            ranks = global_row_number(
-                extracted.select("order_no"),
-                "order_no",
-                col_name="_parent_rank",
-                partitions=self.store.num_partitions,
-                # n_claimed bounds the success count: small rounds keep the
-                # rank a lazy narrow window (no extra jobs), big rounds go
-                # two-phase — the single task would otherwise sort the round
-                approx_rows=n_claimed,
-            )
-            if self._handler_emits:
-                # handler-emitted urls (context.addRequests / enqueueLinks
-                # ({urls}), basic-crawler.ts:1651-1672) append AFTER the
-                # page's extracted links in ONE candidate array, so a single
-                # posexplode yields gap-free per-page positions and the
-                # (_parent_rank << 32) + _pos arrival key stays unique and
-                # deterministic across both sources. Per-row enqueue_label /
-                # enqueue_user_data stamp every url that row emitted.
-                from crawlee_spark.operators.handlers import (
-                    ENQUEUE_LABEL_COL,
-                    ENQUEUE_USER_DATA_COL,
-                )
+    def _enqueue_links(
+        self, classified: DataFrame, round_id: int, n_claimed: int
+    ) -> tuple[DataFrame, int]:
+        """Discovered links (extracted + handler-emitted) → gate → dedup.
+        Returns the fresh frontier rows for the outcome delta and how many
+        were enqueued."""
+        from crawlee_spark.operators.handlers import (
+            ENQUEUE_LABEL_COL,
+            ENQUEUE_URLS_COL,
+            ENQUEUE_USER_DATA_COL,
+        )
 
-                null_s = F.lit(None).cast("string")
-                e_lbl = (
-                    F.col(ENQUEUE_LABEL_COL)
-                    if ENQUEUE_LABEL_COL in self._handler_enqueue_cols
-                    else null_s
-                )
-                e_ud = (
-                    F.col(ENQUEUE_USER_DATA_COL)
-                    if ENQUEUE_USER_DATA_COL in self._handler_enqueue_cols
-                    else null_s
-                )
-                empty = F.array().cast("array<string>")
-                cand_arr = F.concat(
-                    F.transform(
-                        F.coalesce(F.col("_links"), empty),
-                        lambda u: F.struct(
-                            u.alias("url"), null_s.alias("label"), null_s.alias("user_data")
-                        ),
-                    ),
-                    F.transform(
-                        F.coalesce(F.col(ENQUEUE_URLS_COL), empty),
-                        lambda u: F.struct(
-                            u.alias("url"), e_lbl.alias("label"), e_ud.alias("user_data")
-                        ),
-                    ),
-                )
-                links = (
-                    extracted.join(F.broadcast(ranks), "order_no")
-                    .select(
-                        F.col("url").alias("origin_url"),
-                        F.col("label").alias("origin_label"),
-                        F.col("_parent_rank"),
-                        (F.col("crawl_depth") + 1).alias("crawl_depth"),
-                        F.posexplode_outer(cand_arr).alias("_pos", "_cand"),
-                    )
-                    .withColumns(
-                        {
-                            "url": F.col("_cand.url"),
-                            "label": F.col("_cand.label"),
-                            "user_data": F.col("_cand.user_data"),
-                        }
-                    )
-                    .drop("_cand")
-                    .filter(F.col("url").isNotNull())
-                )
-            else:
-                links = (
-                    extracted.join(F.broadcast(ranks), "order_no")
-                    .select(
-                        F.col("url").alias("origin_url"),
-                        F.col("label").alias("origin_label"),
-                        F.col("_parent_rank"),
-                        (F.col("crawl_depth") + 1).alias("crawl_depth"),
-                        F.posexplode_outer("_links").alias("_pos", "url"),
-                    )
-                    .filter(F.col("url").isNotNull())
-                )
-            if self.robots is not None:
-                links = links.join(
-                    self._robots.withColumnRenamed("host", "_rhost"),
-                    F.lower(F.try_parse_url("url", F.lit("HOST"))) == F.col("_rhost"),
-                    "left",
-                ).drop("_rhost")
-                robots_col = "robots_txt"
-            else:
-                links = links.withColumn("robots_txt", F.lit(None).cast("string"))
-                robots_col = "robots_txt"
-            accepted, skipped = self._gate_links(links, robots_col)
-            skipped.withColumn("round_id", F.lit(round_id)).write.mode("append").parquet(self.skipped_dir)
-            # deterministic arrival order: (parent rank in this round, position
-            # on page). 32-bit stride: parent rank is bounded by the per-round
-            # claim (max_concurrency < 2^31) and no real page yields 2^32
-            # links, so the key is collision-free and far from long overflow —
-            # uniqueness is load-bearing (sparse order_no assignment and the
-            # abs(order_no) reclaim re-sequencing both assume it).
-            accepted = accepted.withColumn(
-                "_arrival",
-                F.shiftleft(F.col("_parent_rank").cast("long"), 32) + F.col("_pos"),
-            ).drop("_parent_rank", "_pos", "robots_txt", "origin_label")
-            budget = self._remaining_budget()
-            limit = self.options.enqueue.limit
-            if limit is not None:
-                budget = limit if budget is None else min(budget, limit)
-            carry = [
-                c for c in ("label", "user_data", "method", "payload")
-                if c in accepted.columns  # F3 per-pattern / base-label overrides
-            ]
-            shaped = candidates_to_requests(
-                accepted.select(
-                    # enqueue_strategy stamped per gate segment (recorded for F2)
-                    "url", "crawl_depth", "_arrival", "enqueue_strategy", *carry,
+        extracted = classified.filter(F.col("_outcome") == "success")
+        # parent rank: dense 1..|succ| by order_no. Two-phase global rank
+        # (range-partition + per-partition row_number + offsets) over the
+        # NARROW (order_no) projection — an unpartitioned window here
+        # would funnel the whole round frame through ONE task at a
+        # 512k-claim round — then broadcast-joined back on the unique
+        # order_no (≤ max_concurrency rows, trivially broadcastable).
+        ranks = global_row_number(
+            extracted.select("order_no"),
+            "order_no",
+            col_name="_parent_rank",
+            partitions=self.store.num_partitions,
+            # n_claimed bounds the success count: small rounds keep the
+            # rank a lazy narrow window (no extra jobs), big rounds go
+            # two-phase — the single task would otherwise sort the round
+            approx_rows=n_claimed,
+        )
+        # ONE candidate array of (url, label, user_data) per page: the
+        # extracted links carry no label/user_data; handler-emitted urls
+        # (context.addRequests / enqueueLinks({urls}), basic-crawler.ts:
+        # 1651-1672) append AFTER them, stamped with the row's enqueue_label
+        # / enqueue_user_data. A single posexplode then yields gap-free
+        # per-page positions, so the (_parent_rank << 32) + _pos arrival key
+        # stays unique and deterministic across both sources.
+        null_s = F.lit(None).cast("string")
+        empty = F.array().cast("array<string>")
+
+        def as_candidates(urls: Column, label: Column, user_data: Column) -> Column:
+            return F.transform(
+                F.coalesce(urls, empty),
+                lambda u: F.struct(
+                    u.alias("url"), label.alias("label"), user_data.alias("user_data")
                 ),
-                forefront=False,
             )
-            total_before = self.store._manifest["total_requests"]
-            fresh_rows = self.store.prepare_fresh(shaped, max_new=budget)
-            # prepare_fresh already counted the survivors into the manifest —
-            # no extra job for the metric
-            new_enqueued = self.store._manifest["total_requests"] - total_before
 
-        # ---- outcomes log append. Robots skips never reach the log: the
-        # reference returns BEFORE stats.startJob (basic-crawler.ts:1626-1638),
-        # so they appear in no Statistics series — only in the skipped
-        # side-output and the queue's handled count.
-        attempt_rows = classified.filter(F.col("_outcome") != "skip_robots").select(
+        cand_arr = as_candidates(F.col("_links"), null_s, null_s)
+        if self._handler_emits:
+            e_lbl, e_ud = (
+                F.col(c) if c in self._handler_enqueue_cols else null_s
+                for c in (ENQUEUE_LABEL_COL, ENQUEUE_USER_DATA_COL)
+            )
+            cand_arr = F.concat(cand_arr, as_candidates(F.col(ENQUEUE_URLS_COL), e_lbl, e_ud))
+        links = (
+            extracted.join(F.broadcast(ranks), "order_no")
+            .select(
+                F.col("url").alias("origin_url"),
+                F.col("label").alias("origin_label"),
+                F.col("_parent_rank"),
+                (F.col("crawl_depth") + 1).alias("crawl_depth"),
+                F.posexplode_outer(cand_arr).alias("_pos", "_cand"),
+            )
+            .select("*", "_cand.*")
+            .drop("_cand")
+            .filter(F.col("url").isNotNull())
+        )
+        if self.robots is not None:
+            links = links.join(
+                self._robots.withColumnRenamed("host", "_rhost"),
+                F.lower(F.try_parse_url("url", F.lit("HOST"))) == F.col("_rhost"),
+                "left",
+            ).drop("_rhost")
+        else:
+            links = links.withColumn("robots_txt", F.lit(None).cast("string"))
+        accepted, skipped = self._gate_links(links)
+        skipped.withColumn("round_id", F.lit(round_id)).write.mode("append").parquet(self.skipped_dir)
+        # deterministic arrival order: (parent rank in this round, position
+        # on page). 32-bit stride: parent rank is bounded by the per-round
+        # claim (max_concurrency < 2^31) and no real page yields 2^32
+        # links, so the key is collision-free and far from long overflow —
+        # uniqueness is load-bearing (sparse order_no assignment and the
+        # abs(order_no) reclaim re-sequencing both assume it).
+        accepted = accepted.withColumn(
+            "_arrival",
+            F.shiftleft(F.col("_parent_rank").cast("long"), 32) + F.col("_pos"),
+        ).drop("_parent_rank", "_pos", "robots_txt", "origin_label")
+        budget = self._remaining_budget()
+        limit = self.options.enqueue.limit
+        if limit is not None:
+            budget = limit if budget is None else min(budget, limit)
+        carry = [
+            c for c in ("label", "user_data", "method", "payload")
+            if c in accepted.columns  # F3 per-pattern / base-label overrides
+        ]
+        shaped = candidates_to_requests(
+            accepted.select(
+                # enqueue_strategy stamped per gate segment (recorded for F2)
+                "url", "crawl_depth", "_arrival", "enqueue_strategy", *carry,
+            ),
+            forefront=False,
+        )
+        total_before = self.store._manifest["total_requests"]
+        fresh_rows = self.store.prepare_fresh(shaped, max_new=budget)
+        # prepare_fresh already counted the survivors into the manifest —
+        # no extra job for the metric
+        return fresh_rows, self.store._manifest["total_requests"] - total_before
+
+    def _log_outcomes(self, classified: DataFrame, round_id: int) -> None:
+        """Outcomes log append (C10), the proxy tiers of would-retry
+        requests and the session pool update. Robots skips never reach the
+        log: the reference returns BEFORE stats.startJob (basic-crawler.ts:
+        1626-1638), so they appear in no Statistics series — only in the
+        skipped side-output and the queue's handled count."""
+        attempts = classified.filter(F.col("_outcome") != "skip_robots")
+        attempts.select(
             "request_id",
             "url",
             F.lit(round_id).alias("round_id"),
             F.col("retry_count").alias("attempt"),
-            F.when(F.col("_outcome") == "skip_redirect", F.lit("success"))  # handled+finished
-            .otherwise(F.col("_outcome"))
-            .alias("outcome"),
+            _outcome_label(),
             F.col("status_code").cast("int").alias("status_code"),
             (F.lit(10) + F.pmod(F.xxhash64("request_id", F.lit(round_id)), F.lit(90))).alias("duration_ms"),
             F.col("_error").alias("error_message"),
@@ -1001,8 +1023,7 @@ class CrawlEngine:
                 if self.options.proxy_config is not None
                 else []
             ),
-        )
-        attempt_rows.write.mode("append").parquet(self.outcomes_dir)
+        ).write.mode("append").parquet(self.outcomes_dir)
         if self.options.proxy_config is not None and getattr(
             self.options.proxy_config, "tiered_proxy_urls", ()
         ):
@@ -1012,52 +1033,41 @@ class CrawlEngine:
             # Set-Cookie headers (array<string> ``set_cookie``), each
             # session's jar absorbs this round's cookies in request order
             # (session.ts:341-345) and persists with the pool.
-            outcome_expr = (
-                F.when(F.col("_outcome") == "skip_redirect", F.lit("success"))
-                .otherwise(F.col("_outcome"))
-                .alias("outcome")
-            )
-            sess_cols = [F.col("session_id"), outcome_expr]
+            sess_cols = [F.col("session_id"), _outcome_label()]
             kw = {}
             if "set_cookie" in classified.columns:
                 sess_cols += [F.col("set_cookie"), F.abs(F.col("order_no")).alias("_ord")]
                 kw = {"cookie_col": "set_cookie", "order_col": "_ord"}
-            self._update_sessions(
-                classified.filter(F.col("_outcome") != "skip_robots").select(*sess_cols),
-                round_id,
-                **kw,
-            )
+            self._update_sessions(attempts.select(*sess_cols), round_id, **kw)
 
-        # ---- O(1) counter maintenance from the fused round aggregate:
-        # the manifest's handled/failed totals advance atomically with the
-        # outcome delta below. Monitoring and budgets read these counters
-        # instead of scanning the frontier.
-        # skip_robots increments handled (markRequestHandled) but NOT failed:
-        # the reference treats a fetch-time robots skip as handled-skipped,
-        # never as a failed request (basic-crawler.ts:1626-1638)
+    def _commit(
+        self,
+        classified: DataFrame,
+        round_id: int,
+        cnts: dict,
+        r_lo: int,
+        r_span: int,
+        fresh_rows: DataFrame | None,
+    ) -> None:
+        """MERGE outcomes back into the frontier + append fresh links as the
+        round's outcome delta. The touched set is just the claimed rows' new
+        versions + fresh rows, and that is ALL we write: one
+        O(claimed+fresh) delta per round, never a frontier-wide rewrite or
+        join (compaction rewrites the base).
+
+        O(1) counter maintenance from the round aggregate: the manifest's
+        handled/failed totals advance atomically with the delta. skip_robots
+        increments handled (markRequestHandled) but NOT failed: the
+        reference treats a fetch-time robots skip as handled-skipped, never
+        as a failed request (basic-crawler.ts:1626-1638)."""
         handled_inc = sum(cnts.get(o, 0) for o in ("success", "skip_redirect", "fail", "skip_robots"))
-        failed_inc = cnts.get("fail", 0)
         counter_extra = {
             "handled_total": self.store._manifest["handled_total"] + handled_inc,
-            "failed_total": self.store._manifest["failed_total"] + failed_inc,
+            "failed_total": self.store._manifest["failed_total"] + cnts.get("fail", 0),
         }
-
-        # ---- MERGE outcomes back into the frontier + append fresh links.
-        # The touched set is just the claimed rows' new versions + fresh rows,
-        # and that is ALL we write: one O(claimed+fresh) delta per round,
-        # never a frontier-wide rewrite or join (compaction rewrites the base).
         updated = self._outcome_rows(classified, round_id, r_lo, r_span)
         delta = updated if fresh_rows is None else updated.unionByName(fresh_rows)
         self.store.commit_delta(delta, extra=counter_extra)
-
-        return {
-            "round": round_id,
-            "claimed": n_claimed,
-            "succeeded": cnts.get("success", 0),
-            "links_found": n_links,
-            "enqueued": new_enqueued,
-            "done": False,
-        }
 
     def _outcome_rows(
         self, classified: DataFrame, round_id: int, r_lo: int, r_span: int
@@ -1112,10 +1122,9 @@ class CrawlEngine:
             )
             .withColumn(
                 "error_messages",
-                F.when(
-                    (is_reclaim | is_fail) & F.col("_error").isNotNull(),
-                    F.concat(F.coalesce(F.col("error_messages"), F.array()), F.array(F.col("_error"))),
-                ).otherwise(F.col("error_messages")),
+                F.when(is_reclaim | is_fail, _push_error(F.col("_error"))).otherwise(
+                    F.col("error_messages")
+                ),
             )
             .withColumn(
                 "order_no",
@@ -1136,7 +1145,7 @@ class CrawlEngine:
             return EnqueueOptions(**{**o.__dict__, "max_crawl_depth": self.options.max_crawl_depth})
         return o
 
-    def _gate_links(self, links: DataFrame, robots_col: str):
+    def _gate_links(self, links: DataFrame):
         """Gate discovered links: one ``gate_candidates`` pass, or — with
         ``enqueue_by_label`` — one pass per ORIGIN label, mirroring each
         route's own enqueueLinks call in the reference (the listing->detail
@@ -1150,7 +1159,7 @@ class CrawlEngine:
 
         def one(part: DataFrame, o: EnqueueOptions):
             o = self._merged_opts(o)
-            acc, skip = gate_candidates(part, o, robots_txt_col=robots_col)
+            acc, skip = gate_candidates(part, o, robots_txt_col="robots_txt")
             return acc.withColumn("enqueue_strategy", F.lit(o.strategy)), skip
 
         by_label = self.options.enqueue_by_label
@@ -1177,7 +1186,7 @@ class CrawlEngine:
         return acc, skip
 
     # -- user hooks (C13 Router dispatch + error hooks) ----------------------
-    def _apply_request_handlers(self, classified: DataFrame, can_retry) -> DataFrame:
+    def _apply_request_handlers(self, classified: DataFrame) -> DataFrame:
         """Dispatch the round's successes to their label's handler
         (router.ts:315-329) and fold the results back: extra columns flow to
         the results dataset; a handler THROW reclassifies that request as
@@ -1194,10 +1203,7 @@ class CrawlEngine:
             joined.withColumn(
                 "_outcome",
                 F.when(
-                    (F.col("_outcome") == "success") & err.isNotNull(),
-                    F.when(can_retry & ~F.col("no_retry"), F.lit("retry")).otherwise(
-                        F.lit("fail")
-                    ),
+                    (F.col("_outcome") == "success") & err.isNotNull(), self._retry_or_fail()
                 ).otherwise(F.col("_outcome")),
             )
             .withColumn("_error", F.when(err.isNotNull(), err).otherwise(F.col("_error")))
@@ -1224,14 +1230,7 @@ class CrawlEngine:
             *sel, F.col("_error").alias("error_message")
         ).withColumn(
             # pushErrorMessage happens BEFORE the hook (basic-crawler.ts:1887)
-            "error_messages",
-            F.when(
-                F.col("error_message").isNotNull(),
-                F.concat(
-                    F.coalesce(F.col("error_messages"), F.array()),
-                    F.array(F.col("error_message")),
-                ),
-            ).otherwise(F.col("error_messages")),
+            "error_messages", _push_error(F.col("error_message"))
         )
         muts = apply_error_handler(handler_in, self.options.error_handler)
         muts = muts.select(
@@ -1264,16 +1263,7 @@ class CrawlEngine:
         in_cols = [c for c in HANDLER_INPUT_COLS if c in classified.columns]
         handler_in = failed.select(
             *in_cols, F.col("_error").alias("error_message")
-        ).withColumn(
-            "error_messages",
-            F.when(
-                F.col("error_message").isNotNull(),
-                F.concat(
-                    F.coalesce(F.col("error_messages"), F.array()),
-                    F.array(F.col("error_message")),
-                ),
-            ).otherwise(F.col("error_messages")),
-        )
+        ).withColumn("error_messages", _push_error(F.col("error_message")))
 
         def gen(batches):
             import pandas as pd

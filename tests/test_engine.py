@@ -534,7 +534,7 @@ def test_fetch_join_pruning_is_size_adaptive(spark, tmp_store_dir, tmp_path):
     """The fetch-join picks its physical strategy from the pages source's
     file footprint: tiny corpora keep the plain join (a shuffle is cheaper
     than broadcast machinery), big file-backed corpora prune via the
-    broadcast semi-join; explicit override wins either way."""
+    broadcast semi-join."""
     pages_dir = str(tmp_path / "pages")
     spark.createDataFrame(
         [("https://a.com/x", b"<p>x</p>", 200, "text/html")],
@@ -544,14 +544,6 @@ def test_fetch_join_pruning_is_size_adaptive(spark, tmp_store_dir, tmp_path):
 
     e1 = build_engine(spark, tmp_store_dir + "/1", small)
     assert e1._prune_fetch is False  # 1-row parquet: below the byte floor
-
-    e2 = CrawlEngine(
-        spark,
-        FrontierStore(spark, tmp_store_dir + "/2", num_partitions=2),
-        small,
-        prune_pages_fetch=True,
-    )
-    assert e2._prune_fetch is True  # explicit override
 
     e3 = CrawlEngine(
         spark,
@@ -654,3 +646,71 @@ def test_additional_mime_types_accepted(spark, tmp_store_dir):
 
     assert run("default", ()) == "fail"
     assert run("extended", ("application/rss+xml",)) == "success"
+
+
+def test_transform_request_function_in_crawl_round(spark, tmp_store_dir):
+    """F4 transformRequestFunction (shared.ts:299-305) through a round with
+    no handler: the transform drops one discovered link silently (no skip
+    reason) and stamps a label on the rest, which reaches the frontier."""
+    pages = spark.createDataFrame(
+        [
+            (
+                "https://a.com/start",
+                (
+                    '<html><body><a href="/keep/1">k</a><a href="/drop">d</a>'
+                    '<a href="/keep/2">k</a></body></html>'
+                ).encode(),
+            ),
+        ],
+        "url string, html binary",
+    )
+
+    def transform(df):
+        return df.filter(F.col("url") != "https://a.com/drop").withColumn(
+            "label", F.lit("DETAIL")
+        )
+
+    engine = build_engine(
+        spark,
+        tmp_store_dir,
+        pages,
+        options=CrawlOptions(
+            enqueue=EnqueueOptions(strategy="same-hostname", transform=transform)
+        ),
+    )
+    engine.add_seeds(spark.createDataFrame([("https://a.com/start",)], "url string"))
+    m = engine.run_round()
+    assert m["links_found"] == 3 and m["enqueued"] == 2
+    rows = {
+        r["url"]: (r["label"], r["crawl_depth"], r["handled_at"] is None)
+        for r in engine.store.read().collect()
+    }
+    assert rows == {
+        "https://a.com/start": (None, 0, False),
+        "https://a.com/keep/1": ("DETAIL", 1, True),
+        "https://a.com/keep/2": ("DETAIL", 1, True),
+    }
+    assert "https://a.com/drop" not in {r["url"] for r in engine.skipped().collect()}
+
+
+def test_round_job_count_is_pinned(spark, tmp_store_dir, pages, pages_rows):
+    """A round launches a fixed number of Spark jobs; a phase that adds a
+    driver action (count, collect, eager checkpoint) raises it. Round 2 of
+    the robots-gated fixture crawl (links found and enqueued, no
+    compaction) ran 40 jobs both before and after ``run_round`` became a
+    phase list, measured with this test's own body on local[4]:
+    ``python -m pytest tests/test_engine.py -k round_job_count -s``."""
+    sc = spark.sparkContext
+    engine = build_engine(spark, tmp_store_dir, pages, robots=make_robots(spark))
+    engine.add_seeds(make_seeds(spark, pages_rows))
+    engine.run_round()  # round 1 also materializes the cached pages fixture
+    group = "engine-round-job-count"
+    sc.setJobGroup(group, "run_round job-count pin")
+    try:
+        m = engine.run_round()
+    finally:
+        sc.setJobGroup(None, None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    print(f"round {m['round']}: {jobs} jobs")
+    assert m["round"] == 2 and m["links_found"] > 0 and m["enqueued"] > 0
+    assert jobs <= 40

@@ -135,8 +135,6 @@ def test_mid_round_crash_recovers(spark, tmp_store_dir):
     """Crash AFTER the lease delta but BEFORE the outcome delta: the resumed
     engine's next round sees the crashed round's leases as expired
     (lease_until < round_id) and re-claims the rows — nothing is stuck."""
-    from crawlee_spark.operators.frontier import FRONTIER_SCHEMA, STATE_BEFORE_NAV
-    from crawlee_spark.operators.scheduler import claim_round
     from crawlee_spark.sources.fixtures import make_pages, make_seeds
 
     store = FrontierStore(spark, tmp_store_dir, num_partitions=4, compact_every=100)
@@ -147,17 +145,12 @@ def test_mid_round_crash_recovers(spark, tmp_store_dir):
     )
     engine.add_seeds(make_seeds(spark, n=4))
 
-    # replicate run_round's first half by hand: claim + lease-delta commit,
-    # then "crash" (no outcome delta ever written)
+    # run the round's own claim and lease phases, then "crash" (no outcome
+    # delta ever written)
     crash_round = store.round + 1
-    claimed = claim_round(store.read(), crash_round, engine.policy)
-    leased = (
-        claimed.withColumn("lease_until", F.lit(crash_round).cast("long"))
-        .withColumn("state", F.lit(STATE_BEFORE_NAV))
-        .withColumn("round_id", F.lit(crash_round))
-        .select(*[f.name for f in FRONTIER_SCHEMA.fields])
-    )
-    store.commit_delta(leased, round_increment=True)
+    claimed, n_claimed, _ = engine._claim(crash_round)
+    assert n_claimed > 0
+    engine._lease(claimed, crash_round)
     n_leased = store.read().filter(F.col("lease_until").isNotNull()).count()
     assert n_leased > 0  # the crash left in-flight rows behind
 

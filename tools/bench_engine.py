@@ -82,9 +82,6 @@ def run(
             handlers=handlers,
         ),
     )
-    bc = os.environ.get("SPARK_GRAFT_CLAIMS_BC_MAX")  # A/B the fetch-join pruning
-    if bc is not None:
-        engine.claims_broadcast_max_rows = int(bc)
     seeds = spark.range(pages_n).select(
         F.concat(
             F.lit("https://h.ex"), (F.col("id") % 1000).cast("string"), F.lit(".org/p"),
